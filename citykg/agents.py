@@ -29,23 +29,35 @@ Reference parity (agents/src/main/java/uk/ac/cam/cares/twa/cities/):
   exterior ring skipping the closing point; that is the centroid the
   distance runs on.
 
-Scale shape: requests carry a bounded IRI list (a UI click or a tile),
-so the iris side of every join here is a broadcast-able literal frame;
-the corpus side stays a partitioned triple scan. Nothing in this module
-collects more than the request's own result rows.
+Scale shape: requests carry a bounded IRI list (a UI click or a tile).
+The DataFrame operators (`info_frame`, `distances_frame`,
+`distance_filter_frame`) are the batch API: the iris side of every join
+is a broadcast-able literal frame and the corpus side stays a
+partitioned triple scan. A request that a `StoreRegistry` routes to a
+registered store runs no Spark job in the steady state: the store's
+`ServingView` reads attribute rows with bucket-pruned parquet point
+reads on the driver (`ParquetStoreAdapter.point_read`) and answers
+distances from a columnar centroid index collected once per store
+snapshot. Both paths share the response shaping, so they answer
+identically. Nothing here collects more than the request's own result
+rows, except that index: three columns per city object, once per
+snapshot.
 """
 
 from __future__ import annotations
 
 import itertools
 import json
+import math
 import os
 import threading
+from decimal import ROUND_HALF_UP, Context, Decimal
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import extract, materialize, sources
+from .store import ParquetStoreAdapter
 from .vocab import DEFAULT_BASE
 
 HTTP_POST = "POST"
@@ -64,6 +76,7 @@ KEY_TARGET_URL = "targetURL"
 KEY_SRID = "srid"
 KEY_SRSNAME = "srsName"
 KEY_WATCH = "watch"
+ENVELOPE_PRED = "ocgml:EnvelopeType"
 
 
 class BadRequestException(ValueError):
@@ -99,10 +112,23 @@ def _require_post_iris(request: dict) -> list[str]:
     return [_require_url(i) for i in iris]
 
 
+def _search_radius(request: dict) -> float:
+    try:
+        radius = float(request[SEARCH_DISTANCE])
+    except (KeyError, TypeError, ValueError):
+        raise BadRequestException("searchDistance must be numeric")
+    if math.isnan(radius):
+        # Spark orders NaN above every number (d2 <= NaN holds), numpy
+        # compares it false: the two answer paths would disagree
+        raise BadRequestException("searchDistance must be numeric")
+    return radius
+
+
 def _iris_frame(spark: SparkSession, iris: list[str], col: str = "iri") -> DataFrame:
-    """Request-side literal frame. Requests are UI-bounded (tens of iris),
-    so this side of every join below broadcasts."""
-    return spark.createDataFrame([(i,) for i in iris], f"{col} string")
+    """Request-side literal frame of the DISTINCT iris (a repeated iri
+    must not repeat result rows). Requests are UI-bounded (tens of
+    iris), so this side of every join below broadcasts."""
+    return spark.createDataFrame([(i,) for i in dict.fromkeys(iris)], f"{col} string")
 
 
 def _envelope_centroids(triples: DataFrame) -> DataFrame:
@@ -111,7 +137,7 @@ def _envelope_centroids(triples: DataFrame) -> DataFrame:
     (non-closing) points — GeometryType.computeCentroid(skipLast=true),
     :149-161. Pure JVM HOF expressions over one filtered scan."""
     e = triples.where(F.col("graph") == "cityobject").where(
-        F.col("pred") == "ocgml:EnvelopeType"
+        F.col("pred") == ENVELOPE_PRED
     )
     n_pts = "(size(split(obj, '#')) / 3 - 1)"  # ring points minus closure
     axis = (
@@ -126,6 +152,180 @@ def _envelope_centroids(triples: DataFrame) -> DataFrame:
         axis.format(ax=1) + " as cy",
         axis.format(ax=2) + " as cz",
     )
+
+
+_ROUND_CTX = Context(prec=400)  # every double's decimal form fits
+
+
+def _spark_round(x: float, scale: int = 6) -> float | None:
+    """Spark's `round(x, scale)` on a double: HALF_UP on the value's
+    shortest decimal form (java.math.BigDecimal.valueOf), where Python's
+    round() is half-even on the binary value — round(5e-7, 6) is 0.0
+    there and 1e-6 in Spark. NaN (a null centroid) answers None, as the
+    Spark operators' null does."""
+    if math.isnan(x):
+        return None
+    if math.isinf(x):
+        return x
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP, _ROUND_CTX)
+    return float(q)
+
+
+# ---------------------------------------------------------------------------
+# Response shaping, shared by the DataFrame operators and the ServingView
+# ---------------------------------------------------------------------------
+
+def _info_entries(iris: list, rows) -> list[dict]:
+    """KEY_CITY_OBJECT_INFORMATION payload from (iri, pred, obj) rows:
+    one entry per requested iri in request order (repeats included), the
+    hollow entry for an iri the store lacks, attributes sorted so every
+    row source answers byte-identically."""
+    by_iri: dict[str, list] = {}
+    for iri, pred, obj in rows:
+        by_iri.setdefault(iri, []).append((pred, obj))
+    for attrs in by_iri.values():
+        attrs.sort(key=lambda a: (a[0], a[1] is not None, a[1] or ""))
+    return [
+        {"iri": i, "attributes": [{"pred": p, "obj": o} for p, o in by_iri.get(i, [])]}
+        for i in iris
+    ]
+
+
+def _filter_matches(iris: list[str], rows) -> list[dict]:
+    """distanceFilter payload from (query_iri, neighbor_iri, dist_m)
+    rows: grouped by the query's first position in the request, nearest
+    neighbor first."""
+    first: dict[str, int] = {}
+    for k, i in enumerate(iris):
+        first.setdefault(i, k)
+    return [
+        {"query_iri": q, "neighbor_iri": n, "dist_m": d}
+        for q, n, d in sorted(rows, key=lambda r: (first[r[0]], r[2], r[1]))
+    ]
+
+
+def _pair_distances(iris: list[str], got: dict) -> list:
+    """KEY_DISTANCES payload: one value per i<j request pair, in pair
+    order; a pair missing from `got` in either orientation is null."""
+    return [got.get((a, b), got.get((b, a))) for a, b in itertools.combinations(iris, 2)]
+
+
+# ---------------------------------------------------------------------------
+# Request-serving view of a registered store
+# ---------------------------------------------------------------------------
+
+class _CentroidIndex:
+    """(iri, cx, cy) envelope centroids of every city object of one
+    store snapshot, as columns. The values come from the same JVM
+    expression the DataFrame operators use (`_envelope_centroids`), so
+    the arithmetic below repeats theirs operation for operation."""
+
+    def __init__(self, snapshot, table) -> None:
+        self.snapshot = snapshot
+        self.iris = table.column("iri").to_pylist()
+        self.cx = table.column("cx").to_numpy()  # null -> NaN
+        self.cy = table.column("cy").to_numpy()
+        self.rows_of: dict[str, list[int]] = {}
+        for k, iri in enumerate(self.iris):
+            self.rows_of.setdefault(iri, []).append(k)
+
+    def pair_distances(self, iris: list[str]) -> dict:
+        """{(a, b): dist_m} for every i<j request pair whose ends both
+        have a centroid (distances_frame's rows)."""
+        got = {}
+        for a, b in itertools.combinations(iris, 2):
+            ka, kb = self.rows_of.get(a), self.rows_of.get(b)
+            if ka and kb:
+                dx = float(self.cx[ka[0]]) - float(self.cx[kb[0]])
+                dy = float(self.cy[ka[0]]) - float(self.cy[kb[0]])
+                got[(a, b)] = _spark_round(math.sqrt(dx * dx + dy * dy))
+        return got
+
+    def within(self, iris: list[str], radius: float) -> list[tuple]:
+        """(query_iri, neighbor_iri, dist_m) for every other city object
+        within `radius` of each distinct requested one
+        (distance_filter_frame's rows)."""
+        import numpy as np
+
+        r2 = radius * radius
+        out = []
+        for q in dict.fromkeys(iris):
+            for k in self.rows_of.get(q, ()):
+                dx = self.cx - self.cx[k]
+                dy = self.cy - self.cy[k]
+                d2 = dx * dx + dy * dy
+                hit = d2 <= r2
+                hit[self.rows_of[q]] = False
+                out.extend(
+                    (q, self.iris[j], _spark_round(math.sqrt(d2[j])))
+                    for j in np.flatnonzero(hit)
+                )
+        return out
+
+
+class ServingView:
+    """The read side of one registered store, for request serving.
+
+    A request names a handful of city objects, so planning and running a
+    Spark job over every file of the graph costs far more than the
+    answer. The view instead:
+
+    * reads attribute rows with `ParquetStoreAdapter.point_read` — the
+      requested subjects' bucket files only, on the driver;
+    * answers distances from a `_CentroidIndex` collected once per store
+      snapshot (`ParquetStoreAdapter.snapshot_id`, checked on every
+      request), built lazily by the first request that needs it, under
+      the view's lock;
+    * hands the other routes a DataFrame re-read whenever the snapshot
+      changed (`frame`), so a write through materialize never leaves a
+      stale file list behind.
+
+    A view over an in-memory frame (`register(triples=...)`) has no
+    files: its rows come from a Spark filter and its index, built once,
+    never goes stale."""
+
+    def __init__(self, spark: SparkSession, store_dir: str | None = None,
+                 triples: DataFrame | None = None) -> None:
+        self._adapter = None if store_dir is None else ParquetStoreAdapter(spark, store_dir)
+        self._triples = triples
+        self._lock = threading.Lock()
+        self._frame_at: tuple | None = None  # (snapshot, DataFrame)
+        self._index: _CentroidIndex | None = None
+
+    def frame(self) -> DataFrame:
+        if self._adapter is None:
+            return self._triples
+        snap = self._adapter.snapshot_id()
+        with self._lock:
+            if self._frame_at is None or self._frame_at[0] != snap:
+                self._frame_at = (snap, self._adapter.read())
+            return self._frame_at[1]
+
+    def attribute_rows(self, iris: list[str]) -> list[tuple]:
+        """(iri, pred, obj) cityobject rows of the requested iris, minus
+        the envelope (info_frame's rows)."""
+        uniq = list(dict.fromkeys(iris))
+        if self._adapter is not None:
+            t = self._adapter.point_read("cityobject", uniq)
+            rows = zip(*(t.column(c).to_pylist() for c in ("subj", "pred", "obj")))
+        else:
+            rows = map(tuple, (
+                self._triples.where(F.col("graph") == "cityobject")
+                .where(F.col("subj").isin(uniq))
+                .select("subj", "pred", "obj")
+                .collect()
+            ))
+        return [r for r in rows if r[1] != ENVELOPE_PRED]
+
+    def centroids(self) -> _CentroidIndex:
+        snap = None if self._adapter is None else self._adapter.snapshot_id()
+        with self._lock:
+            if self._index is None or self._index.snapshot != snap:
+                frame = self._triples if self._adapter is None else self._adapter.read()
+                self._index = _CentroidIndex(
+                    snap, _envelope_centroids(frame).select("iri", "cx", "cy").toArrow()
+                )
+            return self._index
 
 
 # ---------------------------------------------------------------------------
@@ -151,41 +351,40 @@ class StoreRegistry:
 
     The reference hard-codes the ontokgrouter registrations (one
     Blazegraph namespace per city); here a registration binds an
-    endpoint to either a materialized store directory (read lazily,
-    cached per registry) or an in-memory triples frame. Agents resolve
-    the store from each request's first IRI — the "set the route based
-    on the IRI" step in CityInformationAgent:163-167 /
+    endpoint to either a materialized store directory or an in-memory
+    triples frame, each behind one `ServingView`. Agents resolve the
+    store from each request's first IRI — the "set the route based on
+    the IRI" step in CityInformationAgent:163-167 /
     DistanceAgent:96-101."""
 
     def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
-        self._dirs: dict[str, str] = {}
-        self._frames: dict[str, DataFrame] = {}
+        self._views: dict[str, ServingView] = {}
 
     def register(self, endpoint: str, store_dir: str | None = None,
                  triples: DataFrame | None = None) -> None:
         if (store_dir is None) == (triples is None):
             raise ValueError("register exactly one of store_dir/triples")
         key = endpoint if endpoint.endswith("/") else endpoint + "/"
-        if store_dir is not None:
-            self._dirs[key] = store_dir
-        else:
-            self._frames[key] = triples
+        self._views[key] = ServingView(self._spark, store_dir=store_dir, triples=triples)
 
     def target_resource_id(self, iri: str) -> str | None:
         """getTargetResourceID analog: the registered endpoint key for
         this object IRI, or None (the reference returns null and callers
         keep their current route)."""
         ep = namespace_endpoint(iri)
-        return ep if (ep in self._dirs or ep in self._frames) else None
+        return ep if ep in self._views else None
 
-    def resolve(self, iri: str) -> DataFrame:
+    def view(self, iri: str) -> ServingView:
         ep = self.target_resource_id(iri)
         if ep is None:
             raise BadRequestException(f"no registered store for {iri!r}")
-        if ep not in self._frames:
-            self._frames[ep] = materialize.read_triples(self._spark, self._dirs[ep])
-        return self._frames[ep]
+        return self._views[ep]
+
+    def resolve(self, iri: str) -> DataFrame:
+        """The store's triples as a DataFrame, current as of its latest
+        committed write."""
+        return self.view(iri).frame()
 
 
 # ---------------------------------------------------------------------------
@@ -223,7 +422,7 @@ class CityInformationAgent:
         want = F.broadcast(_iris_frame(spark, iris, "subj"))
         return (
             triples.where(F.col("graph") == "cityobject")
-            .where(F.col("pred") != "ocgml:EnvelopeType")
+            .where(F.col("pred") != ENVELOPE_PRED)
             .join(want, "subj")
             .select(F.col("subj").alias("iri"), "pred", "obj")
         )
@@ -266,10 +465,7 @@ class CityInformationAgent:
         the candidate join is broadcast (8 query rows x corpus, filtered
         in the same stage) — no shuffle, no self-join of the corpus."""
         iris = _require_post_iris(request)
-        try:
-            radius = float(request[SEARCH_DISTANCE])
-        except (KeyError, TypeError, ValueError):
-            raise BadRequestException("searchDistance must be numeric")
+        radius = _search_radius(request)
         spark = triples.sparkSession
         all_c = _envelope_centroids(triples).drop("cz")
         q = (
@@ -294,22 +490,30 @@ class CityInformationAgent:
         to the request object and return it (collects only the request's
         own result rows, like the servlet's JSON response)."""
         self.validate_input(request)
-        if SEARCH_DISTANCE in request:
-            out = dict(request)
-            out["distanceFilter"] = [
-                r.asDict() for r in self.distance_filter_frame(triples, request).collect()
-            ]
-            return out
         out = dict(request)
+        if SEARCH_DISTANCE in request:
+            rows = self.distance_filter_frame(triples, request).collect()
+            out["distanceFilter"] = _filter_matches(_require_post_iris(request), map(tuple, rows))
+            return out
         rows = self.info_frame(triples, request).collect()
-        by_iri: dict[str, list] = {}
-        for r in rows:
-            by_iri.setdefault(r["iri"], []).append({"pred": r["pred"], "obj": r["obj"]})
-        # requestParams.append(KEY_CITY_OBJECT_INFORMATION, ...) — one
-        # entry per requested iri, in request order
-        out[KEY_CITY_OBJECT_INFORMATION] = [
-            {"iri": i, "attributes": by_iri.get(i, [])} for i in request[KEY_IRIS]
-        ]
+        # requestParams.append(KEY_CITY_OBJECT_INFORMATION, ...)
+        out[KEY_CITY_OBJECT_INFORMATION] = _info_entries(request[KEY_IRIS], map(tuple, rows))
+        return out
+
+    def respond(self, view: ServingView, request: dict) -> dict:
+        """process_request_parameters against a registered store's
+        ServingView: the same validation and response, with rows from
+        the view instead of a Spark job."""
+        self.validate_input(request)
+        iris = _require_post_iris(request)
+        out = dict(request)
+        if SEARCH_DISTANCE in request:
+            rows = view.centroids().within(iris, _search_radius(request))
+            out["distanceFilter"] = _filter_matches(iris, rows)
+            return out
+        out[KEY_CITY_OBJECT_INFORMATION] = _info_entries(
+            request[KEY_IRIS], view.attribute_rows(iris)
+        )
         return out
 
 
@@ -412,9 +616,16 @@ class DistanceAgent:
             )
         got = {(r["iri_a"], r["iri_b"]): r["dist_m"] for r in d.collect()}
         out = dict(request)
-        out[KEY_DISTANCES] = [
-            got.get((a, b), got.get((b, a))) for a, b in itertools.combinations(iris, 2)
-        ]
+        out[KEY_DISTANCES] = _pair_distances(iris, got)
+        return out
+
+    def respond(self, view: ServingView, request: dict) -> dict:
+        """process_request_parameters (without stored distances) against
+        a registered store's ServingView: pair distances from its
+        centroid index, no Spark job."""
+        iris = _require_post_iris(request)
+        out = dict(request)
+        out[KEY_DISTANCES] = _pair_distances(iris, view.centroids().pair_distances(iris))
         return out
 
 
@@ -970,7 +1181,9 @@ def dispatch(
     the first iri's namespace, or the `namespace` key — before the agent
     runs (the reference's AccessAgentMapping route step); an unregistered
     namespace keeps the default `triples`, mirroring the reference's
-    null -> keep-current-route behavior."""
+    null -> keep-current-route behavior. Information and distance
+    requests to a registered store are answered by its ServingView;
+    the other routes run on its DataFrame."""
     request = dict(request)
     request.setdefault(KEY_REQ_METHOD, method)
     if registry is not None:
@@ -982,6 +1195,10 @@ def dispatch(
             ep = str(request[KEY_NAMESPACE]).rstrip("/")
             probe = ep + "/cityobject/X/"  # endpoint given directly: pad 2 segments
         if probe is not None and registry.target_resource_id(probe) is not None:
+            if route == CityInformationAgent.URI:
+                return CityInformationAgent().respond(registry.view(probe), request)
+            if route == DistanceAgent.URI_DISTANCE:
+                return DistanceAgent().respond(registry.view(probe), request)
             triples = registry.resolve(probe)
     if route == CityInformationAgent.URI:
         return CityInformationAgent().process_request_parameters(triples, request)
@@ -1025,17 +1242,28 @@ def serve(
     """Minimal servlet-container analog: a ThreadingHTTPServer whose POST
     handler parses the JSON body, injects `method`, dispatches on the
     path, and echoes the mutated request back as JSON (HTTP 400 on
-    BadRequestException). Returns the started server; `server.server_port`
-    is the bound port, `server.shutdown()` stops it. Spark drivers are
-    thread-safe for job submission, so concurrent requests just become
-    concurrent jobs on the shared SparkSession."""
+    BadRequestException or a body that is not a JSON object). Returns the
+    started server; `server.server_port` is the bound port,
+    `server.shutdown()` stops it.
+
+    Information and distance requests that `registry` routes to a
+    registered store run no Spark job once the store's centroid index is
+    built: the handler threads read parquet and the shared index on the
+    driver, concurrently. Every other request still plans Spark jobs on
+    the shared SparkSession (thread-safe for job submission), so those
+    requests queue on the cluster instead."""
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
     class Handler(BaseHTTPRequestHandler):
         def _handle(self, method):
             try:
-                n = int(self.headers.get("Content-Length", "0"))
-                body = json.loads(self.rfile.read(n) or b"{}")
+                try:
+                    n = int(self.headers.get("Content-Length", "0"))
+                    body = json.loads(self.rfile.read(n) or b"{}")
+                except ValueError as exc:  # JSONDecodeError, bad UTF-8 or length
+                    raise BadRequestException(f"body is not JSON: {exc}") from exc
+                if not isinstance(body, dict):
+                    raise BadRequestException("body must be a JSON object")
                 body[KEY_REQ_METHOD] = method
                 result = dispatch(
                     spark, triples, self.path, body, method=method, registry=registry

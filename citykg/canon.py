@@ -63,6 +63,9 @@ def connected_components(
     (The previous shape ran a second join+count job per round — 2x the
     loop's job count at 10^12-node scale for a scalar the propagation
     already knew.)
+
+    Raises RuntimeError when `max_iter` rounds end with labels still
+    moving: unconverged labels split components silently.
     """
     # materialize the static edge list ONCE: without this every round's
     # propagation join re-executes the full upstream plan (extraction +
@@ -106,8 +109,8 @@ def connected_components(
         changed = new_labels.agg(F.sum("_changed")).first()[0] or 0
         labels = new_labels.drop("_changed")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def incremental_components(
@@ -264,7 +267,8 @@ def connected_components_shortcut(edges: DataFrame, max_iter: int = 16) -> DataF
     propagation needs O(diameter) — use this variant when components can
     be long chains (grid clusters, road networks) rather than the star
     shapes same_as_edges emits. Same contract: edges (src, dst) string
-    ids -> (id, component = min reachable id)."""
+    ids -> (id, component = min reachable id), and the same RuntimeError
+    when `max_iter` rounds end with labels still moving."""
     sym = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -309,5 +313,7 @@ def connected_components_shortcut(edges: DataFrame, max_iter: int = 16) -> DataF
         ).where(F.col("comp") != F.col("_old"))
         lab = l2
         if moved.isEmpty():
-            break
-    return lab.select("id", "comp").withColumnRenamed("comp", "component")
+            return lab.select("id", "comp").withColumnRenamed("comp", "component")
+    raise RuntimeError(
+        f"connected_components_shortcut did not converge in {max_iter} rounds"
+    )

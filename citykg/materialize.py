@@ -101,6 +101,7 @@ def write_triples(
     `fail_after_groups` injects a crash for the resume test.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    _adapter(spark, out_dir).record_buckets(n_buckets)
     done = completed_buckets(spark, out_dir, stage)
     todo = [b for b in range(n_buckets) if b not in done]
     if not todo:
@@ -185,6 +186,7 @@ def upsert_triples(
     a DELETE + append in one transaction). The incoming subject set stays
     a DataFrame end-to-end — no driver-side collect of ids."""
     path = os.path.join(out_dir, "triples")
+    _adapter(spark, out_dir).record_buckets(n_buckets)
     subj_df = triples.select("subj").distinct()
     if os.path.exists(path):
         _delete_subjects_df(

@@ -5,7 +5,7 @@ lineage manifests because the real Iceberg runtime cannot be installed
 in this environment (materialize.py:1-17). This module makes the
 engine-swap surface EXPLICIT: one class — `ParquetStoreAdapter` — owns
 every physical read/write the store performs, and swapping in Iceberg
-means implementing the same five methods against a catalog table. The
+means implementing the same methods against a catalog table. The
 conformance tests (tests/test_store_conformance.py) pin exactly the
 semantics both implementations must share, so the swap is a conformance
 run, not a leap of faith.
@@ -19,6 +19,11 @@ Mapping table (parquet emulation -> Iceberg):
 | read()                  | spark.read.parquet(root/triples)           | spark.table(tbl)                              |
 | list_partitions()       | driver-side directory listing              | SELECT ... FROM tbl.partitions (metadata)     |
 | file_counts(graph, b)   | parquet FOOTER num_rows per file           | tbl.files metadata table (record_count)       |
+| record_buckets(n)       | `_layout.json` beside the table            | partition spec `bucket(n, subj)` at CREATE    |
+| n_buckets()             | read `_layout.json`                        | tbl.spec() bucket transform width             |
+| snapshot_id()           | sorted `_manifest` file names              | tbl.currentSnapshot().snapshotId()            |
+| point_read(g, subjects) | driver reads the subjects' bucket files,   | tbl.newScan().filter(graph = g AND subj IN    |
+|                         | skipping row groups by subj min/max        | (...)) — bucket + metrics pruning, no Spark   |
 
 Semantics the conformance suite asserts on BOTH sides of the swap:
 
@@ -40,13 +45,21 @@ Semantics the conformance suite asserts on BOTH sides of the swap:
 5. lineage/snapshots: per-stage manifest rows (stage, partition_range,
    row_count, status) must reconstruct what changed when — the
    emulation's `_manifest` parquet; Iceberg's snapshots + summary.
+   Every committed write appends a manifest file, so the set of manifest
+   file names changes exactly when the table does: that set is the
+   emulation's snapshot id, which request-serving caches key on.
+6. point reads: `point_read` returns exactly the rows a Spark filter on
+   (graph, subj IN ...) returns, touching only the subjects' buckets.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+LAYOUT_FILE = "_layout.json"
 
 
 class ParquetStoreAdapter:
@@ -109,3 +122,98 @@ class ParquetStoreAdapter:
 
     def partition_dir(self, graph: str, bucket: int) -> str:
         return os.path.join(self.path, f"graph={graph}", f"bucket={bucket}")
+
+    def record_buckets(self, n_buckets: int) -> None:
+        """Record the table's bucket count on its first bucketed write
+        (Iceberg: the partition spec). Every later write must bucket with
+        the same count — rows hashed with another count land in buckets a
+        point read never visits — so a mismatch raises."""
+        have = self._recorded_buckets()
+        if have is None:
+            os.makedirs(self.root, exist_ok=True)
+            with open(os.path.join(self.root, LAYOUT_FILE), "w") as f:
+                json.dump({"n_buckets": int(n_buckets)}, f)
+        elif have != n_buckets:
+            raise ValueError(
+                f"store {self.root} is bucketed by {have}, not {n_buckets}"
+            )
+
+    def _recorded_buckets(self) -> int | None:
+        try:
+            with open(os.path.join(self.root, LAYOUT_FILE)) as f:
+                return int(json.load(f)["n_buckets"])
+        except FileNotFoundError:
+            return None
+
+    def n_buckets(self) -> int:
+        """The bucket count the table was written with; a store that
+        records none cannot be point-read, which is an error rather than
+        an empty answer."""
+        n = self._recorded_buckets()
+        if n is None:
+            raise RuntimeError(
+                f"store {self.root} records no bucket count ({LAYOUT_FILE}); "
+                "write it with materialize.write_triples or upsert_triples"
+            )
+        return n
+
+    def snapshot_id(self) -> tuple[str, ...]:
+        """Identity of the committed table state: the sorted names of the
+        manifest files (every committed write appends one). A metadata
+        listing, no data IO (Iceberg: the current snapshot id)."""
+        try:
+            names = os.listdir(os.path.join(self.root, "_manifest"))
+        except FileNotFoundError:
+            return ()
+        return tuple(sorted(n for n in names if n.endswith(".parquet")))
+
+    def point_read(self, graph: str, subjects):
+        """(subj, pred, obj) rows of `graph` whose subj is one of
+        `subjects`, as a pyarrow Table — read on the driver, no Spark job. Each subject's bucket is computed with the
+        driver-side port of Spark's xxhash64, only those partition
+        directories are listed and opened, and within each file only row
+        groups whose subj min/max statistics can hold a wanted subject
+        are read (the files are subj-sorted, materialize.write_triples)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from .ops.hashing import spark_bucket
+
+        n = self.n_buckets()
+        by_bucket: dict[int, list[str]] = {}
+        for s in dict.fromkeys(subjects):
+            by_bucket.setdefault(spark_bucket(s, n), []).append(s)
+        cols = ["subj", "pred", "obj"]
+        parts = []
+        for b, subs in sorted(by_bucket.items()):
+            d = self.partition_dir(graph, b)
+            try:
+                names = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+            except FileNotFoundError:
+                continue  # no row of this graph hashes to the bucket
+            want = pa.array(subs, pa.string())
+            for name in names:
+                with pq.ParquetFile(os.path.join(d, name)) as pf:
+                    i = pf.metadata.schema.names.index("subj")
+                    groups = [
+                        g for g in range(pf.num_row_groups)
+                        if _may_hold(pf.metadata.row_group(g).column(i).statistics, subs)
+                    ]
+                    if groups:
+                        t = pf.read_row_groups(groups, columns=cols)
+                        parts.append(t.filter(pc.is_in(t["subj"], value_set=want)))
+        if not parts:
+            return pa.table({c: pa.array([], pa.string()) for c in cols})
+        return pa.concat_tables(parts)
+
+
+def _may_hold(stats, subjects: list[str]) -> bool:
+    """Row-group pruning test: False only when the group's subj min/max
+    statistics exclude every wanted subject. Parquet orders strings by
+    UTF-8 bytes, which is Python's code-point order; truncated statistics
+    only widen the range, so they never prune a wanted row."""
+    if stats is None or not stats.has_min_max:
+        return True
+    lo, hi = stats.min, stats.max
+    return any(lo <= s <= hi for s in subjects)

@@ -4,7 +4,9 @@ branch semantics, the import route end-to-end, and the HTTP surface.
 Contracts under test mirror CityInformationAgent.java:92-254,
 DistanceAgent.java:87-149/271-316, CityImportAgent.java:72-200."""
 
+import itertools
 import json
+import urllib.error
 import urllib.request
 
 import pytest
@@ -584,5 +586,196 @@ def test_http_surface_roundtrip(spark, triples):
         # malformed -> 400 (BadRequestException analog)
         status, body = _post(port, "/distance", {"iris": ["not a url"]})
         assert status == 400 and "error" in body
+
+        # a body that is not JSON, or JSON that is not an object -> 400
+        for raw in (b"not json{", b"[1, 2]"):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}/cityobjectinformation", data=raw,
+                headers={"Content-Type": "application/json"}, method="POST",
+            )
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req)
+            assert err.value.code == 400 and "error" in json.loads(err.value.read())
     finally:
         server.shutdown()
+
+
+# ---------------------------------------------------------------------------
+# registry-routed requests: the ServingView against the DataFrame operators
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def store(spark, triples, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("served_store"))
+    materialize.write_triples(spark, triples, out, n_buckets=8, bucket_group=None)
+    return out
+
+
+def _view_requests():
+    from citykg.ops.hashing import spark_bucket
+
+    unknown = f"{DEFAULT_BASE}/cityobject/NOPE_00000000/"
+    iris = [_iri(1), unknown, _iri(7), _iri(1), _iri(300), _iri(42), _iri(5)]
+    assert len({spark_bucket(i, 8) for i in iris}) >= 3  # several buckets
+    return [
+        ("/cityobjectinformation", {"iris": iris}),
+        ("/distance", {"iris": iris}),
+        ("/cityobjectinformation", {"iris": iris, "searchDistance": 5}),
+        ("/cityobjectinformation", {"iris": [unknown]}),
+        ("/cityobjectinformation", {"iris": [unknown, _iri(9)], "searchDistance": 3.5}),
+    ]
+
+
+def test_view_answers_equal_dataframe_operators(spark, triples, store):
+    """A registry-routed request (a ServingView over the store's files,
+    or over a registered frame) answers exactly what the DataFrame
+    operators answer on the same triples: unknown iris get the hollow
+    entry and a null distance, a repeated iri repeats its entry and its
+    zero-distance pair, and the iris span several buckets."""
+    from citykg.agents import StoreRegistry
+
+    frame = materialize.read_triples(spark, store)
+    by_dir = StoreRegistry(spark)
+    by_dir.register(DEFAULT_BASE, store_dir=store)
+    by_frame = StoreRegistry(spark)
+    by_frame.register(DEFAULT_BASE, triples=triples)
+    for route, req in _view_requests():
+        body = {"method": "POST", **req}
+        if route == "/distance":
+            want = DistanceAgent().process_request_parameters(frame, body)
+        else:
+            want = CityInformationAgent().process_request_parameters(frame, body)
+        for reg in (by_dir, by_frame):
+            got = dispatch(spark, triples, route, req, registry=reg)
+            assert got == want, (route, req)
+    # the shaped answers carry what the operators' rows carry
+    iris = _view_requests()[0][1]["iris"]
+    info = dispatch(spark, triples, "/cityobjectinformation", {"iris": iris}, registry=by_dir)
+    rows = CityInformationAgent().info_frame(frame, {"method": "POST", "iris": iris}).collect()
+    entries = {e["iri"]: e["attributes"] for e in info["cityobjectinformation"]}
+    assert sorted((i, a["pred"], a["obj"]) for i, attrs in entries.items() for a in attrs) == sorted(
+        map(tuple, rows))
+    assert info["cityobjectinformation"][1]["attributes"] == []
+    dist = dispatch(spark, triples, "/distance", {"iris": iris}, registry=by_dir)["distances"]
+    assert dist[0] is None and dist[2] == 0.0  # (1, unknown) and (1, 1)
+    pairs = DistanceAgent().distances_frame(frame, {"method": "POST", "iris": iris}).collect()
+    assert {(r.iri_a, r.iri_b): r.dist_m for r in pairs} == {
+        (a, b): d for (a, b), d in zip(itertools.combinations(iris, 2), dist) if d is not None
+    }
+    near = dispatch(spark, triples, "/cityobjectinformation",
+                    {"iris": iris, "searchDistance": 5}, registry=by_dir)["distanceFilter"]
+    op = CityInformationAgent().distance_filter_frame(
+        frame, {"method": "POST", "iris": iris, "searchDistance": 5}).collect()
+    assert sorted((m["query_iri"], m["neighbor_iri"], m["dist_m"]) for m in near) == sorted(
+        map(tuple, op))
+
+
+def test_view_runs_no_spark_job_once_warm(spark, triples, store):
+    """After the first request builds the centroid index, registry-routed
+    requests run no Spark job while the store's snapshot is unchanged."""
+    from citykg.agents import StoreRegistry
+
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=store)
+    tracker = spark.sparkContext.statusTracker()
+    reqs = _view_requests()
+    dispatch(spark, triples, *reqs[1], registry=reg)  # builds the index
+    before = len(tracker.getJobIdsForGroup())
+    for k in range(20):
+        out = dispatch(spark, triples, *reqs[k % len(reqs)], registry=reg)
+        assert out
+    assert len(tracker.getJobIdsForGroup()) == before
+    # the tracker does see jobs run from this thread
+    triples.limit(1).count()
+    assert len(tracker.getJobIdsForGroup()) > before
+
+
+def test_view_builds_one_index_under_concurrent_requests(spark, triples, store, monkeypatch):
+    """Concurrent first requests against a cold view build its centroid
+    index once, and every thread gets the single-threaded answer."""
+    import sys
+    import threading
+
+    from citykg import agents
+
+    builds = []
+
+    class Counting(agents._CentroidIndex):
+        def __init__(self, *args):
+            builds.append(1)
+            super().__init__(*args)
+
+    monkeypatch.setattr(agents, "_CentroidIndex", Counting)
+    reg = agents.StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=store)
+    reqs = _view_requests()
+    want = [DistanceAgent().process_request_parameters(
+        materialize.read_triples(spark, store), {"method": "POST", **reqs[1][1]})]
+    got, errors = [], []
+
+    def client():
+        try:
+            for _ in range(5):
+                got.append(dispatch(spark, triples, *reqs[1], registry=reg))
+        except Exception as exc:  # noqa: BLE001 — reported by the assert below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(builds) == 1
+    assert got == want * 40
+
+
+def test_registry_reads_writes_made_after_registration(spark, triples, tmp_path):
+    """One long-lived registry keeps answering from the store's current
+    state after materialize.upsert_triples and delete_subjects rewrite
+    its partitions: the new attribute rows, the new centroids, and the
+    DataFrame the other routes get."""
+    from citykg.agents import StoreRegistry
+
+    out = str(tmp_path / "store")
+    small = triples.where(F.col("doc_id") < "doc_00000020")
+    materialize.write_triples(spark, small, out, n_buckets=8, bucket_group=None)
+    reg = StoreRegistry(spark)
+    reg.register(DEFAULT_BASE, store_dir=out)
+
+    def info(iri):
+        body = dispatch(spark, triples, "/cityobjectinformation", {"iris": [iri]}, registry=reg)
+        return {(a["pred"], a["obj"]) for a in body["cityobjectinformation"][0]["attributes"]}
+
+    def dist(a, b):
+        return dispatch(spark, triples, "/distance", {"iris": [a, b]}, registry=reg)["distances"][0]
+
+    before = info(_iri(3))
+    assert before and dist(_iri(3), _iri(9)) > 0 and dist(_iri(3), _iri(4)) is not None
+
+    # re-import object 3 with changed attributes and object 9's envelope
+    env9 = small.where((F.col("subj") == _iri(9)) & (F.col("pred") == "ocgml:EnvelopeType")).first().obj
+    is_attr = (F.col("pred") != "ocgml:EnvelopeType") & (F.col("obj_type") == "literal")
+    batch = small.where(F.col("subj") == _iri(3)).withColumn(
+        "obj",
+        F.when(F.col("pred") == "ocgml:EnvelopeType", F.lit(env9))
+        .when(is_attr, F.concat("obj", F.lit("-v2")))
+        .otherwise(F.col("obj")),
+    )
+    materialize.upsert_triples(spark, batch, out, n_buckets=8, input_snapshot="v2")
+    after = info(_iri(3))
+    assert after != before and any(o.endswith("-v2") for _, o in after if o)
+    assert dist(_iri(3), _iri(9)) == 0.0
+
+    materialize.delete_subjects(spark, out, [_iri(4)], n_buckets=8)
+    assert info(_iri(4)) == set()
+    assert dist(_iri(3), _iri(4)) is None
+    # the routes that still take a DataFrame see the same state
+    frame = reg.resolve(_iri(3))
+    assert frame.where(F.col("subj") == _iri(4)).count() == 0
+    assert frame.where((F.col("subj") == _iri(3)) & F.col("obj").endswith("-v2")).count() > 0

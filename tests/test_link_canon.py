@@ -1,6 +1,7 @@
 """Entity linking (exact + MinHash-LSH) and canonicalization (CC, salting,
 IRI re-homing)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from citykg import canon, link
@@ -267,3 +268,17 @@ def test_link_eval_confusion_families(spark):
     assert r.precision == round(1 / 3, 6)
     assert r.recall == round(1 / 3, 6)
     assert r.f1 == round(1 / 3, 6)
+
+
+@pytest.mark.parametrize("shortcut", [False, True])
+def test_connected_components_raise_when_unconverged(spark, shortcut):
+    """A chain too long to settle in max_iter rounds raises instead of
+    returning labels that split one component; enough rounds converge."""
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(30)], "src string, dst string"
+    )
+    cc = canon.connected_components_shortcut if shortcut else canon.connected_components
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cc(edges, max_iter=2)
+    labels = cc(edges, max_iter=40).collect()
+    assert {r.component for r in labels} == {"n00"} and len(labels) == 31

@@ -132,3 +132,78 @@ def test_commit_protocol_brackets_every_compaction(spark, tmp_path_factory):
     for pr, cnt in done:
         g, b = pr.split("/", 1)
         assert sum(adapter.file_counts(g, int(b)).values()) == cnt
+
+
+def test_point_read_equals_spark_filter(spark, tmp_path_factory):
+    """Conformance #6: point_read returns exactly the rows a Spark filter
+    on (graph, subj IN ...) returns — across buckets, with absent and
+    repeated subjects — and reads only the subjects' buckets."""
+    from citykg.ops.hashing import spark_bucket
+
+    out = str(tmp_path_factory.mktemp("point_read"))
+    materialize.write_triples(
+        spark, _frame(spark, [f"Q{i}" for i in range(60)]), out, n_buckets=4,
+        bucket_group=None,
+    )
+    adapter = ParquetStoreAdapter(spark, out)
+    assert adapter.n_buckets() == 4
+    want = ["Q3", "Q17", "Q42", "NOPE", "Q3", "Q59"]
+    assert len({spark_bucket(s, 4) for s in want}) > 1
+    got = adapter.point_read("building", want)
+    spark_rows = (
+        adapter.read().where((F.col("graph") == "building") & F.col("subj").isin(want))
+        .select("subj", "pred", "obj").collect()
+    )
+    assert sorted(zip(*(got.column(c).to_pylist() for c in ("subj", "pred", "obj")))) == sorted(
+        map(tuple, spark_rows)
+    )
+    assert got.num_rows == 4  # Q3 once, NOPE absent
+    assert adapter.point_read("cityobject", want).num_rows == 0
+
+
+def test_bucket_count_is_recorded_and_enforced(spark, store, tmp_path_factory):
+    """A store that records no bucket count cannot be point-read (an
+    error, never an empty answer), and a write with another bucket count
+    than the recorded one is refused."""
+    with pytest.raises(RuntimeError, match="bucket count"):
+        store.point_read("building", ["S1"])
+    out = str(tmp_path_factory.mktemp("layout"))
+    materialize.write_triples(spark, _frame(spark, ["R1", "R2"]), out, n_buckets=4)
+    with pytest.raises(ValueError, match="bucketed by 4"):
+        materialize.upsert_triples(spark, _frame(spark, ["R1"]).drop("bucket"), out, n_buckets=8)
+
+
+def test_snapshot_id_changes_with_every_committed_write(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("snapshots"))
+    adapter = ParquetStoreAdapter(spark, out)
+    assert adapter.snapshot_id() == ()
+    materialize.write_triples(spark, _frame(spark, ["T1", "T2", "T3"]), out, n_buckets=4)
+    s1 = adapter.snapshot_id()
+    assert s1 and s1 == adapter.snapshot_id()
+    materialize.upsert_triples(spark, _frame(spark, ["T2"], obj="v2").drop("bucket"), out, n_buckets=4)
+    s2 = adapter.snapshot_id()
+    assert s2 != s1
+    materialize.delete_subjects(spark, out, ["T3"], n_buckets=4)
+    assert adapter.snapshot_id() not in (s1, s2)
+
+
+def test_xxhash64_port_matches_spark(spark):
+    """The driver-side xxhash64 equals Spark's on strings of 0-100 UTF-8
+    bytes and more — every branch of XXH64: the 32-byte stripes, 8-byte
+    words, the 4-byte word and single-byte tail — including multi-byte
+    characters; and its pmod bucket equals materialize.with_bucket's."""
+    import random
+
+    from citykg.ops.hashing import spark_bucket, xxhash64
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ019/:#_-" + "éß" + "中文" + "😀"
+    strs = [""] + ["".join(rng.choice(alphabet) for _ in range(n)) for n in range(1, 101)]
+    strs += ["a" * n for n in range(0, 101)]  # every byte length 0..100
+    strs += ["http://www.theworldavatar.com/citieskg/namespace/berlin/sparql/cityobject/UUID_x/"]
+    df = spark.createDataFrame([(s,) for s in strs], "subj string")
+    for n in (4, 7, 64):
+        rows = materialize.with_bucket(df, n).withColumn("h", F.xxhash64("subj")).collect()
+        for r in rows:
+            assert xxhash64(r.subj) == r.h, r.subj
+            assert spark_bucket(r.subj, n) == r.bucket, (r.subj, n)
