@@ -38,9 +38,12 @@ registered store runs no Spark job in the steady state: the store's
 `ServingView` reads attribute rows with bucket-pruned parquet point
 reads on the driver (`ParquetStoreAdapter.point_read`) and answers
 distances from a columnar centroid index collected once per store
-snapshot. Both paths share the response shaping, so they answer
-identically. Nothing here collects more than the request's own result
-rows, except that index: three columns per city object, once per
+snapshot, which pays off while the store is read-mostly: the first
+distance or filter request after a committed write rebuilds it. A store
+whose bucket count cannot be established reads attribute rows through
+`info_frame` instead. Both paths share the response shaping, so they
+answer identically. Nothing here collects more than the request's own
+result rows, except that index: three columns per city object, once per
 snapshot.
 """
 
@@ -157,8 +160,8 @@ def _envelope_centroids(triples: DataFrame) -> DataFrame:
 _ROUND_CTX = Context(prec=400)  # every double's decimal form fits
 
 
-def _spark_round(x: float, scale: int = 6) -> float | None:
-    """Spark's `round(x, scale)` on a double: HALF_UP on the value's
+def _spark_round(x: float) -> float | None:
+    """Spark's `round(x, 6)` on a double: HALF_UP on the value's
     shortest decimal form (java.math.BigDecimal.valueOf), where Python's
     round() is half-even on the binary value — round(5e-7, 6) is 0.0
     there and 1e-6 in Spark. NaN (a null centroid) answers None, as the
@@ -167,7 +170,7 @@ def _spark_round(x: float, scale: int = 6) -> float | None:
         return None
     if math.isinf(x):
         return x
-    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP, _ROUND_CTX)
+    q = Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP, _ROUND_CTX)
     return float(q)
 
 
@@ -274,54 +277,55 @@ class ServingView:
       requested subjects' bucket files only, on the driver;
     * answers distances from a `_CentroidIndex` collected once per store
       snapshot (`ParquetStoreAdapter.snapshot_id`, checked on every
-      request), built lazily by the first request that needs it, under
-      the view's lock;
-    * hands the other routes a DataFrame re-read whenever the snapshot
-      changed (`frame`), so a write through materialize never leaves a
-      stale file list behind.
+      request) from the snapshot's DataFrame, built lazily by the first
+      request that needs it, under the index lock;
+    * hands the other routes that DataFrame, re-read whenever the
+      snapshot changed (`frame`, under its own lock, so an index build
+      never holds them up), so a write through materialize never leaves
+      a stale file list behind.
 
     A view over an in-memory frame (`register(triples=...)`) has no
-    files: its rows come from a Spark filter and its index, built once,
-    never goes stale."""
+    files, nor has a store whose bucket count cannot be established:
+    their rows come from `CityInformationAgent.info_frame`, one Spark
+    job per request. An in-memory frame's index, built once, never goes
+    stale."""
 
     def __init__(self, spark: SparkSession, store_dir: str | None = None,
                  triples: DataFrame | None = None) -> None:
         self._adapter = None if store_dir is None else ParquetStoreAdapter(spark, store_dir)
         self._triples = triples
-        self._lock = threading.Lock()
+        self._frame_lock = threading.Lock()
+        self._index_lock = threading.Lock()
         self._frame_at: tuple | None = None  # (snapshot, DataFrame)
         self._index: _CentroidIndex | None = None
 
-    def frame(self) -> DataFrame:
+    def _snapshot_frame(self) -> tuple:
+        """(snapshot id, DataFrame) of the store's current state."""
         if self._adapter is None:
-            return self._triples
+            return None, self._triples
         snap = self._adapter.snapshot_id()
-        with self._lock:
+        with self._frame_lock:
             if self._frame_at is None or self._frame_at[0] != snap:
                 self._frame_at = (snap, self._adapter.read())
-            return self._frame_at[1]
+            return self._frame_at
 
-    def attribute_rows(self, iris: list[str]) -> list[tuple]:
-        """(iri, pred, obj) cityobject rows of the requested iris, minus
-        the envelope (info_frame's rows)."""
-        uniq = list(dict.fromkeys(iris))
-        if self._adapter is not None:
-            t = self._adapter.point_read("cityobject", uniq)
-            rows = zip(*(t.column(c).to_pylist() for c in ("subj", "pred", "obj")))
-        else:
-            rows = map(tuple, (
-                self._triples.where(F.col("graph") == "cityobject")
-                .where(F.col("subj").isin(uniq))
-                .select("subj", "pred", "obj")
-                .collect()
-            ))
+    def frame(self) -> DataFrame:
+        return self._snapshot_frame()[1]
+
+    def attribute_rows(self, request: dict) -> list[tuple]:
+        """(iri, pred, obj) rows of the requested city objects, minus the
+        envelope: info_frame's rows."""
+        if self._adapter is None or self._adapter.n_buckets() is None:
+            rows = CityInformationAgent().info_frame(self.frame(), request).collect()
+            return list(map(tuple, rows))
+        t = self._adapter.point_read("cityobject", _require_post_iris(request))
+        rows = zip(*(t.column(c).to_pylist() for c in ("subj", "pred", "obj")))
         return [r for r in rows if r[1] != ENVELOPE_PRED]
 
     def centroids(self) -> _CentroidIndex:
-        snap = None if self._adapter is None else self._adapter.snapshot_id()
-        with self._lock:
+        snap, frame = self._snapshot_frame()
+        with self._index_lock:
             if self._index is None or self._index.snapshot != snap:
-                frame = self._triples if self._adapter is None else self._adapter.read()
                 self._index = _CentroidIndex(
                     snap, _envelope_centroids(frame).select("iri", "cx", "cy").toArrow()
                 )
@@ -512,7 +516,7 @@ class CityInformationAgent:
             out["distanceFilter"] = _filter_matches(iris, rows)
             return out
         out[KEY_CITY_OBJECT_INFORMATION] = _info_entries(
-            request[KEY_IRIS], view.attribute_rows(iris)
+            request[KEY_IRIS], view.attribute_rows(request)
         )
         return out
 

@@ -71,11 +71,12 @@ def _merge(h: int, v: int) -> int:
     return ((h ^ _round(0, v)) * _P1 + _P4) & _M64
 
 
-def xxhash64(s: str, seed: int = SPARK_XXH64_SEED) -> int:
+def xxhash64(s: str) -> int:
     """Spark SQL's `xxhash64(s)` for one string, as the signed 64-bit
     value Spark returns: XXH64 over the UTF-8 bytes with little-endian
     lanes (Spark's XXH64.hashUnsafeBytes). Lets the driver name the
     bucket of a subject without a Spark job."""
+    seed = SPARK_XXH64_SEED
     data = s.encode("utf-8")
     n = len(data)
     i = 0

@@ -20,7 +20,8 @@ Mapping table (parquet emulation -> Iceberg):
 | list_partitions()       | driver-side directory listing              | SELECT ... FROM tbl.partitions (metadata)     |
 | file_counts(graph, b)   | parquet FOOTER num_rows per file           | tbl.files metadata table (record_count)       |
 | record_buckets(n)       | `_layout.json` beside the table            | partition spec `bucket(n, subj)` at CREATE    |
-| n_buckets()             | read `_layout.json`                        | tbl.spec() bucket transform width             |
+| n_buckets()             | read `_layout.json` (older stores: derive  | tbl.spec() bucket transform width             |
+|                         | from manifest rows, check, then record)    |                                               |
 | snapshot_id()           | sorted `_manifest` file names              | tbl.currentSnapshot().snapshotId()            |
 | point_read(g, subjects) | driver reads the subjects' bucket files,   | tbl.newScan().filter(graph = g AND subj IN    |
 |                         | skipping row groups by subj min/max        | (...)) — bucket + metrics pruning, no Spark   |
@@ -56,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +74,7 @@ class ParquetStoreAdapter:
         self.spark = spark
         self.root = out_dir
         self.path = os.path.join(out_dir, "triples")
+        self._derived: tuple | None = None  # (snapshot, derived n_buckets)
 
     # -- writes ---------------------------------------------------------
     def append(self, df: DataFrame) -> None:
@@ -127,12 +130,15 @@ class ParquetStoreAdapter:
         """Record the table's bucket count on its first bucketed write
         (Iceberg: the partition spec). Every later write must bucket with
         the same count — rows hashed with another count land in buckets a
-        point read never visits — so a mismatch raises."""
-        have = self._recorded_buckets()
+        point read never visits — so a mismatch raises, also against a
+        table written before counts were recorded."""
+        have = self.n_buckets()
         if have is None:
-            os.makedirs(self.root, exist_ok=True)
-            with open(os.path.join(self.root, LAYOUT_FILE), "w") as f:
-                json.dump({"n_buckets": int(n_buckets)}, f)
+            if self.exists() and not self._buckets_agree(n_buckets):
+                raise ValueError(
+                    f"store {self.root} holds rows not bucketed by {n_buckets}"
+                )
+            self._write_layout(n_buckets)
         elif have != n_buckets:
             raise ValueError(
                 f"store {self.root} is bucketed by {have}, not {n_buckets}"
@@ -145,17 +151,72 @@ class ParquetStoreAdapter:
         except FileNotFoundError:
             return None
 
-    def n_buckets(self) -> int:
-        """The bucket count the table was written with; a store that
-        records none cannot be point-read, which is an error rather than
-        an empty answer."""
+    def _write_layout(self, n_buckets: int) -> None:
+        os.makedirs(self.root, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(prefix=f".{LAYOUT_FILE}.", dir=self.root)
+        with os.fdopen(fd, "w") as f:
+            json.dump({"n_buckets": int(n_buckets)}, f)
+        os.replace(tmp, os.path.join(self.root, LAYOUT_FILE))
+
+    def n_buckets(self) -> int | None:
+        """The bucket count the table was written with, or None when it
+        cannot be established. A table written before counts were
+        recorded takes it from its lineage manifest — a write_triples
+        stage logs one row per bucket of range(n_buckets), every other
+        stage only buckets below that — once the count is checked
+        against the rows themselves (`_buckets_agree`); it is then
+        recorded. The derivation is cached per snapshot."""
         n = self._recorded_buckets()
-        if n is None:
-            raise RuntimeError(
-                f"store {self.root} records no bucket count ({LAYOUT_FILE}); "
-                "write it with materialize.write_triples or upsert_triples"
-            )
-        return n
+        if n is not None or not self.exists():
+            return n
+        snap = self.snapshot_id()
+        if self._derived is None or self._derived[0] != snap:
+            n = self._manifest_buckets()
+            if n is not None and not self._buckets_agree(n):
+                n = None
+            if n is not None:
+                try:
+                    self._write_layout(n)
+                except OSError:
+                    pass  # a read-only store keeps serving from the cache
+            self._derived = (snap, n)
+        return self._derived[1]
+
+    def _manifest_buckets(self) -> int | None:
+        import pyarrow.parquet as pq
+
+        if not self.snapshot_id():
+            return None
+        ranges = pq.read_table(
+            os.path.join(self.root, "_manifest"), columns=["partition_range"]
+        ).column(0).to_pylist()
+        buckets = [int(r) for r in ranges if r is not None and r.isdigit()]
+        return max(buckets) + 1 if buckets else None
+
+    def _buckets_agree(self, n_buckets: int) -> bool:
+        """Whether the table's rows sit where `n_buckets` puts them: no
+        bucket directory at or past the count, and the first subjects of
+        (up to) 8 partitions spread over the table hash to their own
+        bucket. A count that divides the true one and passes the first
+        test answers point reads correctly, so it need not be caught."""
+        import pyarrow.parquet as pq
+
+        from .ops.hashing import spark_bucket
+
+        parts = self.list_partitions()
+        if any(b >= n_buckets for _, b, _ in parts):
+            return False
+        for g, b, _ in parts[:: max(1, len(parts) // 8)]:
+            d = self.partition_dir(g, b)
+            names = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+            if not names:
+                continue
+            with pq.ParquetFile(os.path.join(d, names[0])) as pf:
+                batch = next(pf.iter_batches(batch_size=64, columns=["subj"]), None)
+            subs = set() if batch is None else set(batch.column(0).to_pylist())
+            if any(spark_bucket(s, n_buckets) != b for s in subs if s is not None):
+                return False
+        return True
 
     def snapshot_id(self) -> tuple[str, ...]:
         """Identity of the committed table state: the sorted names of the
@@ -169,11 +230,12 @@ class ParquetStoreAdapter:
 
     def point_read(self, graph: str, subjects):
         """(subj, pred, obj) rows of `graph` whose subj is one of
-        `subjects`, as a pyarrow Table — read on the driver, no Spark job. Each subject's bucket is computed with the
-        driver-side port of Spark's xxhash64, only those partition
-        directories are listed and opened, and within each file only row
-        groups whose subj min/max statistics can hold a wanted subject
-        are read (the files are subj-sorted, materialize.write_triples)."""
+        `subjects`, as a pyarrow Table — read on the driver, no Spark
+        job. Each subject's bucket is computed with the driver-side port
+        of Spark's xxhash64, only those partition directories are listed
+        and opened, and within each file only row groups whose subj
+        min/max statistics can hold a wanted subject are read (the files
+        are subj-sorted, materialize.write_triples)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -181,6 +243,11 @@ class ParquetStoreAdapter:
         from .ops.hashing import spark_bucket
 
         n = self.n_buckets()
+        if n is None:
+            raise RuntimeError(
+                f"store {self.root} has no established bucket count "
+                f"({LAYOUT_FILE} or manifest write rows); read it with a Spark filter"
+            )
         by_bucket: dict[int, list[str]] = {}
         for s in dict.fromkeys(subjects):
             by_bucket.setdefault(spark_bucket(s, n), []).append(s)

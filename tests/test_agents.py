@@ -6,6 +6,8 @@ DistanceAgent.java:87-149/271-316, CityImportAgent.java:72-200."""
 
 import itertools
 import json
+import os
+import shutil
 import urllib.error
 import urllib.request
 
@@ -733,6 +735,37 @@ def test_view_builds_one_index_under_concurrent_requests(spark, triples, store, 
     assert not any(t.is_alive() for t in threads) and not errors
     assert len(builds) == 1
     assert got == want * 40
+
+
+def test_registry_serves_store_written_without_layout(spark, triples, store, tmp_path):
+    """A store written before bucket counts were recorded (no
+    _layout.json) still answers registry-routed requests as the
+    operators do: its count comes from the write stage's manifest rows
+    and is recorded; with no manifest either, attribute rows come from
+    info_frame instead of a point read."""
+    from citykg.agents import StoreRegistry
+
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(store, legacy)
+    layout = os.path.join(legacy, "_layout.json")
+    os.remove(layout)
+    frame = materialize.read_triples(spark, legacy)
+    for has_manifest in (True, False):
+        if not has_manifest:
+            os.remove(layout)
+            shutil.rmtree(os.path.join(legacy, "_manifest"))
+        reg = StoreRegistry(spark)
+        reg.register(DEFAULT_BASE, store_dir=legacy)
+        for route, req in _view_requests():
+            body = {"method": "POST", **req}
+            if route == "/distance":
+                want = DistanceAgent().process_request_parameters(frame, body)
+            else:
+                want = CityInformationAgent().process_request_parameters(frame, body)
+            assert dispatch(spark, triples, route, req, registry=reg) == want, (route, req)
+        assert os.path.exists(layout) == has_manifest
+    with open(os.path.join(store, "_layout.json")) as f:
+        assert json.load(f) == {"n_buckets": 8}
 
 
 def test_registry_reads_writes_made_after_registration(spark, triples, tmp_path):

@@ -173,6 +173,41 @@ def test_bucket_count_is_recorded_and_enforced(spark, store, tmp_path_factory):
         materialize.upsert_triples(spark, _frame(spark, ["R1"]).drop("bucket"), out, n_buckets=8)
 
 
+def test_bucket_count_of_store_written_without_layout(spark, tmp_path_factory):
+    """A store written before bucket counts were recorded takes its count
+    from the write stage's manifest rows, checked against its rows, and
+    records it; a later write with another count is refused. Upserts
+    alone log only the buckets they touched, so their manifest bounds
+    the count from below; a bound the rows contradict is not taken."""
+    from citykg.ops.hashing import spark_bucket
+
+    out = str(tmp_path_factory.mktemp("legacy"))
+    materialize.write_triples(spark, _frame(spark, [f"L{i}" for i in range(30)]), out, n_buckets=4)
+    layout = os.path.join(out, "_layout.json")
+    os.remove(layout)
+    adapter = ParquetStoreAdapter(spark, out)
+    assert adapter.n_buckets() == 4 and os.path.exists(layout)
+    assert adapter.point_read("building", ["L3", "L17"]).num_rows == 2
+    os.remove(layout)
+    with pytest.raises(ValueError, match="bucketed by 4"):
+        materialize.upsert_triples(spark, _frame(spark, ["L1"]).drop("bucket"), out, n_buckets=8)
+
+    out = str(tmp_path_factory.mktemp("upserted"))
+    subs = [s for s in (f"U{i}" for i in range(200)) if spark_bucket(s, 8) < 5]
+    assert max(spark_bucket(s, 8) for s in subs) == 4
+    materialize.upsert_triples(spark, _frame(spark, subs).drop("bucket"), out, n_buckets=8)
+    os.remove(os.path.join(out, "_layout.json"))
+    adapter = ParquetStoreAdapter(spark, out)
+    assert adapter.n_buckets() is None  # the manifest says 5; the rows say otherwise
+    with pytest.raises(RuntimeError, match="bucket count"):
+        adapter.point_read("building", subs[:2])
+    with pytest.raises(ValueError, match="not bucketed by 5"):
+        adapter.record_buckets(5)
+    adapter.record_buckets(8)
+    assert adapter.n_buckets() == 8
+    assert adapter.point_read("building", subs[:2]).num_rows == 2
+
+
 def test_snapshot_id_changes_with_every_committed_write(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("snapshots"))
     adapter = ParquetStoreAdapter(spark, out)
